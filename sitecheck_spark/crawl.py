@@ -19,9 +19,9 @@ become POST requests crawled independently of their GET twins.
                      misses pass through as 404 rows, so the html-carrying
                      join output is never cached); the only place html is
                      ever read (column pruning, SURVEY.md §4)
-      5. checkers  = DataFrame builders over parsed (C2..C5, C7), all JVM
-                     checkers + the spelling token explode fused into one
-                     scan of the parsed cache
+      5. checkers  = C2..C5 over parsed as one scan of the parsed cache
+                     (spelling: dictionary subtracted and context built
+                     in-row, no join)
       6. cand      = explode(outlinks) ∪ meta-refresh targets (hop-capped
                      redirect chains) -> ext/domain/depth filters ->
                      groupBy(url).min(struct(depth, referrer, redirects))
@@ -59,7 +59,7 @@ from sitecheck_spark.checkers import wave_findings_pass
 from sitecheck_spark.extract import PARSED_SCHEMA, parse_pages_batch
 from sitecheck_spark.functions.urls import canonicalize, netloc_of
 from sitecheck_spark.golden import IGNORED_EXTENSIONS
-from sitecheck_spark.seen import BloomShard, CuckooShard
+from sitecheck_spark.seen import BloomShard
 from sitecheck_spark.sources import catalog as catalog_mod
 from sitecheck_spark.sources.catalog import WaveCatalog
 
@@ -74,10 +74,8 @@ class CrawlConfig:
     n_shards: int = 32
     salt_buckets: int = 8
     use_bloom: bool = True
-    filter_kind: str = "bloom"         # 'bloom' | 'cuckoo' (cuckoo: deletable)
     bloom_bits: int = 1 << 17          # per shard; multiple of 8
     bloom_hashes: int = 7
-    cuckoo_buckets: int = 1 << 13      # per shard; power of two, 4 slots each
     checkpoint_dir: str | None = None  # enables resumable mode (catalog.py)
     # Resumable mode commits `seen` as per-wave DELTAS (this wave's new
     # requests) with a full compaction snapshot every k waves: per-wave
@@ -233,45 +231,12 @@ def _compile_rules_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataF
         yield pd.DataFrame(rows, columns=["netloc", "seq", "prefix", "allow"])
 
 
-def _robots_gate_fn(passthrough_cols: list[str]):
-    """mapInPandas over (…cols…, rules) -> (…cols…, robots_allowed)."""
-
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            verdicts = []
-            for url, netloc, rules in zip(pdf["url"], pdf["netloc"], pdf["rules"]):
-                if rules is None or (isinstance(rules, float) and pd.isna(rules)):
-                    verdicts.append(True)
-                    continue
-                if netloc not in cache:
-                    try:
-                        cache[netloc] = robots_mod._build_parser(rules)
-                    except Exception:
-                        cache[netloc] = None
-                rp = cache[netloc]
-                try:
-                    verdicts.append(rp.can_fetch(robots_mod.USER_AGENT, url) if rp else True)
-                except Exception:
-                    verdicts.append(True)
-            out = pdf[passthrough_cols].copy()
-            out["robots_allowed"] = verdicts
-            yield out
-
-    return fn
-
-
 # --- bloom shard cogroup functions (module-level: must be picklable) -------
 
-def _new_filter(cfg: "CrawlConfig"):
-    if cfg.filter_kind == "cuckoo":
-        return CuckooShard(cfg.cuckoo_buckets)
-    return BloomShard(cfg.bloom_bits, cfg.bloom_hashes)
-
-
-def _filter_from_bytes(raw: bytes):
-    return CuckooShard.from_bytes(raw) if raw[:4] == CuckooShard.HEADER \
-        else BloomShard.from_bytes(raw)
+# The seen-filter kind recorded in each checkpoint manifest. Checkpoints
+# written under another kind (e.g. the retired "cuckoo" shards) resume by
+# rebuilding their shards from the exact seen set.
+_FILTER_KIND = "bloom"
 
 
 _CAND_COLS = ["url", "netloc", "depth", "priority", "referrer", "redirects",
@@ -290,19 +255,18 @@ def _make_probe_merge_fn(cfg: "CrawlConfig"):
     Sound because the seen set grows by exactly this wave's candidate set:
     every candidate is marked seen this wave (enqueued or robots-blocked).
     Probing happens before adding, so same-wave flags are unaffected. Only
-    filter-NEGATIVE hashes are inserted: re-adding a positive is a no-op
-    for bloom but NOT for cuckoo (duplicate fingerprints eat slots until
-    premature saturation — cycle links recur every wave), and skipping a
-    false-positive new URL stays exact because probe-positives always fall
-    through to the exact anti-join.
+    filter-NEGATIVE hashes are inserted (re-adding a positive is a no-op
+    for the bits and would inflate n_items), and skipping a false-positive
+    new URL stays exact because probe-positives always fall through to the
+    exact anti-join.
     """
 
     def fn(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(shard_pdf):
-            bloom = _filter_from_bytes(bytes(shard_pdf["bits"].iloc[0]))
+            bloom = BloomShard.from_bytes(bytes(shard_pdf["bits"].iloc[0]))
             n_items = int(shard_pdf["n_items"].iloc[0])
         else:
-            bloom = _new_filter(cfg)
+            bloom = BloomShard(cfg.bloom_bits, cfg.bloom_hashes)
             n_items = 0
         parts = []
         if len(cand_pdf):
@@ -312,10 +276,7 @@ def _make_probe_merge_fn(cfg: "CrawlConfig"):
             out["kind"] = 0
             out["maybe_seen"] = maybe_seen
             fresh = hashes[~maybe_seen]
-            if isinstance(bloom, CuckooShard):
-                bloom.insert(fresh)  # flips to saturated (all-True) on overflow
-            else:
-                bloom.add(fresh)
+            bloom.add(fresh)
             n_items += int(len(fresh))
             out["bits"] = None
             out["n_items"] = 0
@@ -346,17 +307,13 @@ def _make_probe_merge_fn(cfg: "CrawlConfig"):
 def _make_merge_fn(cfg: "CrawlConfig"):
     def merge(key: tuple, new_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(shard_pdf):
-            bloom = _filter_from_bytes(bytes(shard_pdf["bits"].iloc[0]))
+            bloom = BloomShard.from_bytes(bytes(shard_pdf["bits"].iloc[0]))
             n_items = int(shard_pdf["n_items"].iloc[0])
         else:
-            bloom = _new_filter(cfg)
+            bloom = BloomShard(cfg.bloom_bits, cfg.bloom_hashes)
             n_items = 0
         if len(new_pdf):
-            hashes = new_pdf["url_hash"].to_numpy()
-            if isinstance(bloom, CuckooShard):
-                bloom.insert(hashes)
-            else:
-                bloom.add(hashes)
+            bloom.add(new_pdf["url_hash"].to_numpy())
             n_items += len(new_pdf)
         return pd.DataFrame(
             {"shard": [int(key[0])], "bits": [bloom.to_bytes()], "n_items": [n_items]}
@@ -559,11 +516,22 @@ def crawl(
         # with; otherwise probe false-negatives skip the exact anti-join
         # and silently re-enqueue crawled urls. Old manifests lack the
         # keys -> assume compatible (pre-guard behavior).
+        reshard = ck_cfg.get("n_shards", cfg.n_shards) != cfg.n_shards
         rebuild_shards = (
-            ck_cfg.get("n_shards", cfg.n_shards) != cfg.n_shards
-            or ck_cfg.get("filter_kind", cfg.filter_kind) != cfg.filter_kind
+            reshard
+            or ck_cfg.get("filter_kind", _FILTER_KIND) != _FILTER_KIND
             or not catalog.has_table("shards", resumed_from)
         )
+        if reshard:
+            # the stored shard column is pmod(url_hash, OLD n_shards):
+            # rebuilding from it would file every hash under its old shard
+            # id and the probe (new modulus) would miss them. Recompute it,
+            # and commit a full snapshot first so later resumes never read
+            # a base/delta chain with mixed moduli.
+            seen = seen.withColumn(
+                "shard", F.pmod(F.col("url_hash"), F.lit(cfg.n_shards)).cast("int")
+            )
+            force_seen_full = True
         if "verb" not in seen.columns:
             # pre-contract-v3 checkpoint: the stored url_hash/shard (and
             # the bloom bits built from them) hash the URL ALONE; v3
@@ -756,11 +724,10 @@ def crawl(
             # from ONE scan of the parsed cache (every separate filter branch
             # would fetch the full cached batches again; robots findings join
             # the gated frontier below instead)
-            page_findings, checker_handle = wave_findings_pass(
+            wave_findings.append(wave_findings_pass(
                 parsed, cfg.max_redirects, dict_words,
                 checkers=cfg.run_checkers,
-            )
-            wave_findings.append(page_findings)
+            ))
 
             # Candidate edges: outlinks (depth+1, fresh redirect counter) plus
             # meta-refresh redirect targets (same depth, hop counter +1 along the
@@ -931,8 +898,6 @@ def crawl(
                 findings_delta = f_findings.result()
                 if f_shards is not None:
                     shards = f_shards.result()
-                elif cfg.use_bloom:
-                    shards = _merge_shards(spark, new_seen, shards, cfg)
             t_state = time.time() - t0
 
             fetch_logs.append(log_delta)
@@ -971,7 +936,7 @@ def crawl(
                     config={"budget_per_host": cfg.budget_per_host,
                             "max_depth": cfg.max_depth, "seeds": seed_canon,
                             "n_shards": cfg.n_shards,
-                            "filter_kind": cfg.filter_kind},
+                            "filter_kind": _FILTER_KIND},
                     state_kinds={"seen": "full" if compact else "delta"},
                 )
 
@@ -981,8 +946,6 @@ def crawl(
             gated.unpersist()
             if fused_handle is not None:
                 fused_handle.unpersist()
-            if checker_handle is not None:
-                checker_handle.unpersist()
             if cfg.verbose:
                 print(f"[crawl] wave={wave} next_frontier={n_frontier} "
                       f"wall={time.time()-t_wave:.2f}s "
@@ -1133,7 +1096,12 @@ def _robots_gate(df: DataFrame, rules: DataFrame, passthrough: list[str]) -> Dat
     `_rules` DataFrame (the crawl loop persists the aggregate once). A df
     that ALREADY carries `_path` (the crawl's probe cogroup computes it
     in-band, _make_probe_merge_fn) skips the mapInPandas pass entirely —
-    the gate is then join + row-local array election, no Python at all."""
+    the gate is then join + row-local array election, no Python at all.
+
+    Precondition: `df` must be unique per passthrough tuple. The gate does
+    not deduplicate, so a duplicate input row comes out as a duplicate
+    frontier/seen row. Both callers hold: the seeds are a sorted set and
+    the candidates are grouped by request identity before the probe."""
     if "_rules" not in rules.columns:
         rules = _rules_array(rules)
     first_hit = F.get(
@@ -1239,17 +1207,12 @@ def _make_rebuild_fn(cfg: "CrawlConfig"):
     """Rebuild one shard's filter from scratch out of its exact seen hashes."""
 
     def fn(key, seen_pdf: pd.DataFrame, _marker_pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = _new_filter(cfg)
-        n_items = 0
+        bloom = BloomShard(cfg.bloom_bits, cfg.bloom_hashes)
         if len(seen_pdf):
-            hashes = seen_pdf["url_hash"].to_numpy()
-            if isinstance(filt, CuckooShard):
-                filt.insert(hashes)
-            else:
-                filt.add(hashes)
-            n_items = int(len(seen_pdf))
+            bloom.add(seen_pdf["url_hash"].to_numpy())
         return pd.DataFrame(
-            {"shard": [int(key[0])], "bits": [filt.to_bytes()], "n_items": [n_items]}
+            {"shard": [int(key[0])], "bits": [bloom.to_bytes()],
+             "n_items": [len(seen_pdf)]}
         )
 
     return fn
@@ -1259,12 +1222,9 @@ def forget_urls(
     seen: DataFrame, shards: DataFrame | None, urls: list[str], cfg: CrawlConfig
 ) -> tuple[DataFrame, DataFrame | None]:
     """Re-crawl support: remove urls from the exact seen set and REBUILD the
-    affected probabilistic shards from the remaining exact seen hashes, so a
-    subsequent crawl fetches them again. Rebuilding (vs cuckoo delete) is the
-    only sound path: a 16-bit cuckoo fingerprint collision would let delete()
-    remove a copy belonging to a *different* retained URL, creating a false
-    negative that skips the exact anti-join and duplicates that URL in seen.
-    Rebuild also makes bloom shards (which cannot delete) forgettable.
+    affected bloom shards (which cannot delete) from the remaining exact seen
+    hashes, so a subsequent crawl fetches them again. A rebuilt shard holds
+    exactly its retained hashes, so no retained url can probe negative.
     Unaffected shards pass through untouched. Returns (seen, shards)."""
     spark = seen.sparkSession
     canon = sorted({u for u in (canonicalize(u) for u in urls) if u})

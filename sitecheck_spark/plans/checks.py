@@ -80,7 +80,3 @@ def shuffle_exchanges_carrying(df: DataFrame, column: str) -> list[str]:
 def count_shuffles(df: DataFrame) -> int:
     """Number of Exchange operators in the plan tree (not the detail dump)."""
     return len(re.findall(r"\(\d+\) Exchange", formatted_plan(df)))
-
-
-def has_whole_stage_codegen(df: DataFrame) -> bool:
-    return "WholeStageCodegen" in formatted_plan(df)

@@ -1,4 +1,4 @@
-"""Partitioned Bloom + cuckoo-filter URL-seen set (SURVEY.md §2.4 A1).
+"""Partitioned Bloom-filter URL-seen set (SURVEY.md §2.4 A1).
 
 The reference keeps an in-memory Python ``set`` of hashed request identities
 (SURVEY.md §1.1). At 10^10-URL frontier scale an exact set is the bottleneck,
@@ -6,8 +6,10 @@ so the engine keeps a *sharded* probabilistic seen-set:
 
 - shard key: ``pmod(xxhash64(canonical_url), n_shards)`` — the same xxhash64
   Spark computes JVM-side, so Python never re-hashes strings.
-- each shard is a Bloom filter (fast membership, zero false negatives) plus
-  optionally a cuckoo filter (supports deletion for re-crawl semantics).
+- each shard is a Bloom filter (fast membership, zero false negatives).
+  The seen set only grows during a crawl, so no deletable filter is kept:
+  forgetting urls for a re-crawl (crawl.forget_urls) rebuilds the affected
+  shards from the exact seen set instead.
 - shards are built/merged/probed inside ``applyInPandas``/cogroup passes over
   numpy bit arrays; they persist as a ``binary`` column in the
   ``seen_shards`` table so a crawl resumes from the last committed wave.
@@ -100,113 +102,3 @@ class BloomShard:
             raise ValueError("incompatible bloom shards")
         return BloomShard(self.n_bits, self.n_hashes, self.bits | other.bits)
 
-
-class CuckooShard:
-    """Cuckoo filter over int64 key hashes: membership with deletion support.
-
-    4-slot buckets of uint16 fingerprints (0 = empty). Partial-key cuckoo
-    hashing: alt_bucket = bucket XOR hash(fingerprint).
-    """
-
-    HEADER = b"CKF1"
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None,
-                 saturated: bool = False):
-        # power-of-two bucket count so XOR stays in range
-        if n_buckets & (n_buckets - 1):
-            raise ValueError("n_buckets must be a power of two")
-        self.n_buckets = n_buckets
-        self.table = (
-            table if table is not None else np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        )
-        # Saturation fallback: a failed insert would create a false negative
-        # (an item the filter forgot), which for a seen-filter means
-        # re-crawling. Once saturated, contains() answers all-True so every
-        # probe degrades to the exact anti-join — slower, never wrong.
-        self.saturated = saturated
-
-    @classmethod
-    def sized_for(cls, n_items: int) -> "CuckooShard":
-        need = max(16, int(n_items / (0.84 * cls.SLOTS)) + 1)
-        return cls(1 << (need - 1).bit_length())
-
-    def _fp_and_buckets(self, hashes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        h = _as_u64(hashes)
-        fp = (h & np.uint64(0xFFFF)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)  # 0 is the empty marker
-        mask = np.uint64(self.n_buckets - 1)
-        b1 = ((h >> np.uint64(16)) & mask).astype(np.int64)
-        alt = (_mix(fp.astype(np.uint64)) & mask).astype(np.int64)
-        b2 = b1 ^ alt
-        return fp, b1, b2
-
-    def _alt_bucket(self, bucket: int, fp: int) -> int:
-        mask = self.n_buckets - 1
-        return bucket ^ int(_mix(np.uint64(fp)) & np.uint64(mask))
-
-    def insert(self, hashes) -> np.ndarray:
-        """Insert each hash; returns bool array (False = shard full)."""
-        fps, b1s, b2s = self._fp_and_buckets(hashes)
-        ok = np.ones(len(fps), dtype=bool)
-        rng_state = 0x12345678  # deterministic kick choice
-        for i in range(len(fps)):
-            fp, b1, b2 = int(fps[i]), int(b1s[i]), int(b2s[i])
-            if self._try_put(b1, fp) or self._try_put(b2, fp):
-                continue
-            bucket = b1
-            placed = False
-            for _ in range(self.MAX_KICKS):
-                rng_state = (rng_state * 1103515245 + 12345) & 0x7FFFFFFF
-                slot = rng_state % self.SLOTS
-                fp, self.table[bucket, slot] = int(self.table[bucket, slot]), fp
-                bucket = self._alt_bucket(bucket, fp)
-                if self._try_put(bucket, fp):
-                    placed = True
-                    break
-            ok[i] = placed
-        if not ok.all():
-            self.saturated = True
-        return ok
-
-    def _try_put(self, bucket: int, fp: int) -> bool:
-        row = self.table[bucket]
-        empty = np.nonzero(row == 0)[0]
-        if len(empty):
-            self.table[bucket, empty[0]] = fp
-            return True
-        return False
-
-    def contains(self, hashes) -> np.ndarray:
-        fps, b1s, b2s = self._fp_and_buckets(hashes)
-        if self.saturated:
-            return np.ones(len(fps), dtype=bool)
-        in1 = (self.table[b1s] == fps[:, None]).any(axis=1)
-        in2 = (self.table[b2s] == fps[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete(self, hashes) -> np.ndarray:
-        fps, b1s, b2s = self._fp_and_buckets(hashes)
-        removed = np.zeros(len(fps), dtype=bool)
-        for i in range(len(fps)):
-            for bucket in (int(b1s[i]), int(b2s[i])):
-                slots = np.nonzero(self.table[bucket] == fps[i])[0]
-                if len(slots):
-                    self.table[bucket, slots[0]] = 0
-                    removed[i] = True
-                    break
-        return removed
-
-    def to_bytes(self) -> bytes:
-        return (self.HEADER + self.n_buckets.to_bytes(8, "little")
-                + bytes([1 if self.saturated else 0]) + self.table.tobytes())
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooShard":
-        if raw[:4] != cls.HEADER:
-            raise ValueError("not a CuckooShard blob")
-        n_buckets = int.from_bytes(raw[4:12], "little")
-        saturated = bool(raw[12])
-        table = np.frombuffer(raw[13:], dtype=np.uint16).reshape(n_buckets, cls.SLOTS).copy()
-        return cls(n_buckets, table, saturated)

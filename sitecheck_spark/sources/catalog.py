@@ -192,10 +192,12 @@ def verify_bucketed_table_layout(
     saw_subdir = False
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
+        # '_'/'.' entries are writer leftovers (_SUCCESS, a crashed write's
+        # _temporary/ or .spark-staging/), never data — for files AND dirs
+        if name.startswith(("_", ".")):
+            continue
         if st.isDirectory():
             saw_subdir = True
-            continue
-        if name.startswith(("_", ".")):
             continue
         m = re.search(r"_(\d{5})\.", name)
         if not m or int(m.group(1)) >= n_buckets:
@@ -371,7 +373,8 @@ class WaveCatalog:
                 # discarding every committed wave (a clean restart is
                 # correct but defeats the checkpoint store's purpose in
                 # exactly the crash it exists to survive). A torn tmp from
-                # a mid-write crash fails json parsing and is ignored.
+                # a mid-write crash fails json parsing and is ignored, as is
+                # a parseable tmp that is not a manifest (no committed_wave).
                 _, tpath = self._fs(self.base + "/.manifest.tmp")
                 if not fs.exists(tpath):
                     return None
@@ -382,9 +385,12 @@ class WaveCatalog:
                 finally:
                     stream.close()
                 try:
-                    return json.loads(body)
+                    recovered = json.loads(body)
                 except ValueError:
                     return None
+                if not isinstance(recovered, dict) or "committed_wave" not in recovered:
+                    return None
+                return recovered
             stream = fs.open(hpath)
             try:
                 body = self.spark._jvm.org.apache.commons.io.IOUtils.toString(

@@ -9,6 +9,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 
+def _test_heap_gb():
+    mem_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return max(2, min(16, int(mem_gb // 2)))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = (
@@ -26,9 +31,12 @@ def spark():
         # test_resume late in the session) holds — a near-full heap turns
         # TaskMemoryManager page allocation into a retry storm (observed:
         # full suite 10x slower, then executor death mid test_sources)
-        # long before a clean OOM. The host has 128G; bench sessions use
-        # 48g.
-        .config("spark.driver.memory", "16g")
+        # long before a clean OOM. On a host with less than 32G a 16g heap
+        # outgrows physical memory instead: the collector keeps expanding
+        # the heap and the kernel kills the JVM a few tests in, failing
+        # every later Spark test. So the heap is half the host's memory,
+        # capped at 16g.
+        .config("spark.driver.memory", f"{_test_heap_gb()}g")
         # generous RPC/heartbeat margin: under host contention a paused JVM
         # must not read as a dead one
         .config("spark.network.timeout", "600s")

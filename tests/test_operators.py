@@ -538,46 +538,6 @@ def test_findings_pass_equals_separate_checkers(spark):
     assert {m for m, *_ in fused} == {"regex", "comments", "metadata"}
 
 
-def test_findings_with_spelling_equals_separate_checkers(spark):
-    """The one-scan C2+C3+C5+C4 builder (crawl's findings job when a
-    dictionary is present) must emit the exact multiset of
-    findings_pass(parsed) ∪ check_spelling(parsed, dictionary) — including
-    byte-identical spelling context details."""
-    from sitecheck_spark import checkers
-    from sitecheck_spark.extract import PARSED_SCHEMA, parse_pages_batch
-    from sitecheck_spark.sources.corpus import make_dictionary_pdf, make_pages_pdf
-
-    pages = spark.createDataFrame(
-        make_pages_pdf(60),
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    dictionary = spark.createDataFrame(make_dictionary_pdf())
-    parsed = (
-        pages.groupBy("url")
-        .agg(F.max_by("html", "warc_ts").alias("html"))
-        .select(
-            "url", F.lit("h").alias("netloc"), F.lit(0).alias("wave"),
-            F.lit(0).alias("depth"), F.lit(0.0).alias("priority"),
-            F.lit("").alias("referrer"), F.lit(0).alias("redirects"),
-            F.lit("GET").alias("verb"), F.lit("").alias("post_data"), "html",
-        )
-        .mapInPandas(parse_pages_batch, PARSED_SCHEMA)
-    )
-    fused_df, handle = checkers.findings_with_spelling(parsed, dictionary)
-    got = [(r["module"], r["url"], r["wave"], r["detail"])
-           for r in fused_df.collect()]
-    handle.unpersist()
-    want = [(r["module"], r["url"], r["wave"], r["detail"])
-            for r in checkers.findings_pass(parsed).collect()]
-    for r in checkers.check_spelling(parsed, dictionary).collect():
-        want.append(("spelling", r["url"], r["wave"], r["detail"]))
-    assert sorted(got) == sorted(want)
-    # corpus must actually exercise the spelling path
-    assert any(m == "spelling" for m, *_ in got)
-    # no in-band token rows may leak into the findings
-    assert all(m != checkers.SPELL_TOKEN_MODULE for m, *_ in got)
-
-
 def test_wave_findings_pass_single_scan_equality(spark):
     """The crawl's one-scan wave findings builder must equal the separate
     builders' union: broken_link for status=404 rows, over-cap redirects,
@@ -604,11 +564,8 @@ def test_wave_findings_pass_single_scan_equality(spark):
         F.when(F.xxhash64("url") % 5 == 0, F.lit(None)).otherwise(F.col("html")).alias("html"),
     )
     parsed = fetched.mapInPandas(parse_pages_batch, PARSED_SCHEMA)
-    got_df, handle = checkers.wave_findings_pass(parsed, 4, dictionary)
     got = [(r["module"], r["url"], r["wave"], r["detail"], r["referrer"])
-           for r in got_df.collect()]
-    if handle is not None:
-        handle.unpersist()
+           for r in checkers.wave_findings_pass(parsed, 4, dictionary).collect()]
     ok = parsed.filter(F.col("status") == 200)
     want = []
     for r in parsed.filter(F.col("status") == 404).collect():

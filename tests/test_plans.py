@@ -423,7 +423,8 @@ def test_bucket_layout_guard_rejects_nested_layout(spark):
     """A table root whose data files sit in SUBDIRECTORIES (partitioned or
     hand-laid layout) must fail the layout guard loudly instead of
     vacuously passing with zero files checked (the old non-recursive sweep
-    returned as 'empty table')."""
+    returned as 'empty table'). An empty root holding only a crashed
+    write's leftover _temporary/ dir is not a nested layout and passes."""
     import os
     import shutil
     import tempfile as _tf
@@ -446,3 +447,11 @@ def test_bucket_layout_guard_rejects_nested_layout(spark):
     with pytest.raises(ValueError, match="no data files at the table root"):
         register_pages_bucketed_table(spark, nested, n_buckets=8,
                                       table="pages_bt_nested")
+    leftover = _tf.mkdtemp() + "/pages_bt_leftover"
+    os.makedirs(os.path.join(leftover, "_temporary", "0"))
+    with open(os.path.join(leftover, "_temporary", "0", "part-0.parquet"),
+              "wb") as f:
+        f.write(b"torn")
+    t = register_pages_bucketed_table(spark, leftover, n_buckets=8,
+                                      table="pages_bt_leftover")
+    assert t.count() == 0

@@ -340,6 +340,61 @@ def test_resume_twice_after_pre_v3_migration(spark, pages, tmp_path):
     resumed.release()
 
 
+@pytest.mark.parametrize("change", ["filter_kind", "n_shards"])
+def test_resume_rebuilds_incompatible_shards(spark, pages, tmp_path,
+                                             baseline_run, change):
+    """Committed shard bits are reused on resume only when the manifest's
+    filter kind and shard count match this run's. A checkpoint written
+    under the retired cuckoo shards (manifest filter_kind "cuckoo", CKF1
+    blobs) or under another n_shards must resume by rebuilding its shards
+    from the exact seen set — and still equal the uninterrupted crawl."""
+    import json
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    base_summary, base_waves = baseline_run
+    seeds = make_seeds_pdf().url.tolist()
+    ckpt = str(tmp_path / f"ckpt_{change}")
+    crawl(spark, pages, seeds, _cfg(max_waves=2, checkpoint_dir=ckpt)).release()
+    resume_cfg = _cfg(checkpoint_dir=ckpt)
+    if change == "filter_kind":
+        m = WaveCatalog(ckpt).read_manifest()
+        m["config"]["filter_kind"] = "cuckoo"
+        shards_path = m["waves"]["1"]["lineage"]["shards"]["path"]
+        ckf = (
+            spark.read.parquet(shards_path)
+            .select("shard", F.concat(F.lit(b"CKF1"), F.lit(bytes(16)))
+                    .alias("bits"), "n_items")
+            .localCheckpoint(eager=True)
+        )
+        tmp = shards_path + ".tmp"
+        ckf.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(shards_path)
+        os.rename(tmp, shards_path)
+        with open(os.path.join(ckpt, "manifest.json"), "w") as f:
+            json.dump(m, f)
+    else:
+        resume_cfg = _cfg(checkpoint_dir=ckpt, n_shards=8)
+
+    resumed = crawl(spark, pages, seeds, resume_cfg)
+    assert _summary(resumed) == base_summary
+    assert resumed.waves == base_waves
+    assert all(bytes(r["bits"])[:4] == b"BLM1" for r in resumed.shards.collect())
+    n = resume_cfg.n_shards
+    bad = resumed.seen.filter(
+        F.col("shard") != F.pmod(F.col("url_hash"), F.lit(n))
+    ).count()
+    assert bad == 0
+    if change == "n_shards":
+        # the first commit after a reshard is a full seen snapshot, so no
+        # later resume reads a base/delta chain with mixed shard moduli
+        m = WaveCatalog(ckpt).read_manifest()
+        assert m["waves"]["2"]["lineage"]["seen"]["kind"] == "full"
+        assert m["config"]["n_shards"] == n
+    resumed.release()
+
+
 def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
                                                               tmp_path):
     """The remote delete+rename fallback has a window where manifest.json
@@ -365,6 +420,9 @@ def test_remote_manifest_recovers_from_tmp_after_crash_window(spark, pages,
     manifest.unlink()
     assert WaveCatalog(ckpt, spark).last_committed_wave() == 1
 
-    # a TORN tmp (mid-write crash) must not be trusted
-    (ckpt_dir / ".manifest.tmp").write_text('{"committed_wave": 1, "wav')
-    assert WaveCatalog(ckpt, spark).read_manifest() is None
+    # a TORN tmp (mid-write crash) must not be trusted, nor a parseable
+    # tmp that is not a manifest
+    for body in ('{"committed_wave": 1, "wav', '{}'):
+        (ckpt_dir / ".manifest.tmp").write_text(body)
+        assert WaveCatalog(ckpt, spark).read_manifest() is None
+        assert WaveCatalog(ckpt, spark).last_committed_wave() is None
